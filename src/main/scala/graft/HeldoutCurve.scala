@@ -338,7 +338,8 @@ object HeldoutCurve {
     val (_, tIvf) = time {
       graft.operators.ProjIndex.ensureIvf(spark, dir, "scale", cells, 2) {
         val (c, a, _) = Ivf.sizedBuild(
-          base.select(col("bid").as("vec_id"), col("bv").as("embedding")), 2)
+          base.select(col("bid").as("vec_id"), col("bv").as("embedding")), 2,
+          n, Tables.embDim(spark, dir))
         (c, a)
       }
     }

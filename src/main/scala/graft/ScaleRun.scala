@@ -119,7 +119,8 @@ object ScaleRun {
       val (r, tIvfScale) = time {
         graft.operators.ProjIndex.ensureIvf(spark, dir, "scale", scaleCells, 2) {
           val (c, a, _) = Ivf.sizedBuild(
-            base.select(col("bid").as("vec_id"), col("bv").as("embedding")), 2)
+            base.select(col("bid").as("vec_id"), col("bv").as("embedding")), 2,
+            Tables.baseCount(spark, dir), Tables.embDim(spark, dir))
           (c, a)
         }
       }

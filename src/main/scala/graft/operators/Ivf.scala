@@ -59,16 +59,16 @@ object Ivf {
     math.max(1L, n / (TrainPerCell * cells))
 
   /** Data-sized build: cells and training stride derived from the
-    * corpus count; returns (centroids, full assignment, cells). */
-  def sizedBuild(emb: DataFrame, iters: Int): (DataFrame, DataFrame, Int) = {
-    val n = emb.count()
+    * corpus count; returns (centroids, full assignment, cells).
+    * `n` / `dim` = the row count and embedding width of `emb`, from
+    * the caller's memoized Tables counts (no probe jobs here). */
+  def sizedBuild(emb: DataFrame, iters: Int, n: Long, dim: Int): (DataFrame, DataFrame, Int) = {
     val k = cellsFor(n)
     val stride = trainStrideFor(n, k)
     val train = if (stride <= 1L) emb else emb.filter(col("vec_id") % stride === 0)
     // fused-Lloyd hint: trainN ≤ n/stride + 1 (the gate only needs a
-    // size class, both branches are bit-identical); one size() probe
-    // for the dimensionality
-    val c = centroids(train, k, iters, Some((n / stride + 1L, dimOf(emb))))
+    // size class, both branches are bit-identical)
+    val c = centroids(train, k, iters, Some((n / stride + 1L, dim)))
     (c, assign(emb, c), k)
   }
 
@@ -79,6 +79,14 @@ object Ivf {
     * the distributed branch — the driver must never absorb a
     * cluster-sized Lloyd loop. */
   private val FusedIterWorkCap = 1L << 27
+
+  /** The fused-Lloyd gate: `n` collected rows of `dim` floats fit
+    * Rescore's bank budget, and one Lloyd round of `k` centroids over
+    * `workDim`-wide rows stays under FusedIterWorkCap. IVF trains on
+    * whole rows (workDim = dim); PQ collects whole rows once and runs
+    * each subspace over its dsub-wide slice (workDim = dsub). */
+  private[operators] def fusedFits(n: Long, dim: Int, k: Int, workDim: Int): Boolean =
+    Rescore.fitsBank(n, dim) && n * k.toLong * workDim <= FusedIterWorkCap
 
   /** Deterministic k-means: init = k lowest vec_ids, `iters` Lloyd
     * rounds. Returns (cid, cv: array<double>) centroids.
@@ -98,11 +106,14 @@ object Ivf {
   def centroids(emb: DataFrame, k: Int, iters: Int,
       fusedHint: Option[(Long, Int)] = None): DataFrame = {
     fusedHint
-      .filter { case (n, dim) =>
-        Rescore.fitsBank(n, dim) && n * k.toLong * dim <= FusedIterWorkCap
-      }
-      .flatMap(_ => centroidsFused(emb, k, iters)) match {
-      case Some(df) => return df
+      .filter { case (n, dim) => fusedFits(n, dim, k, dim) }
+      .flatMap(_ => collectFloatRows(emb)) match {
+      case Some(rows) =>
+        val s = emb.sparkSession
+        import s.implicits._
+        val (cids, cvs) = lloyd(rows, k, iters)
+        return s.createDataset(cids.toIndexedSeq.zip(cvs.toIndexedSeq.map(_.toSeq)))
+          .toDF("cid", "cv")
       case None => ()
     }
     val spark = emb.sparkSession
@@ -140,11 +151,11 @@ object Ivf {
     cents
   }
 
-  /** The driver-side Lloyd loop (fused branch of centroids). None when
-    * the element type isn't float (the DF branch's udaf semantics
-    * would differ) — the size gates were already checked from the
-    * hint. */
-  private def centroidsFused(emb: DataFrame, k: Int, iters: Int): Option[DataFrame] = {
+  /** The train rows on the driver for the fused branch: one collect of
+    * (vec_id, embedding). None when the element type isn't float (the
+    * DF branch's udaf semantics would differ) — callers check the size
+    * gates (fusedFits) before collecting. */
+  private[operators] def collectFloatRows(emb: DataFrame): Option[Array[(Long, Array[Float])]] = {
     emb.schema.find(_.name == "embedding").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, _)) => ()
@@ -152,8 +163,15 @@ object Ivf {
     }
     val s = emb.sparkSession
     import s.implicits._
-    val rows = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
+    Some(emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect())
+  }
+
+  /** The driver-side Lloyd loop over rows already on the driver — the
+    * ONE fused implementation behind Ivf.centroids and Pq.train (which
+    * runs it per subspace over in-memory slices of a single collect).
+    * Returns (cids, centroid bank), cid-ascending. */
+  private[operators] def lloyd(rows: Array[(Long, Array[Float])], k: Int,
+      iters: Int): (Array[Long], Array[Array[Double]]) = {
     // init = k lowest vec_ids, cid = rank among them; cv = the float
     // vector widened per element (Vec.asD's cast)
     val init = rows.sortBy(_._1).take(k)
@@ -202,9 +220,7 @@ object Ivf {
       }
       it += 1
     }
-    Some(s.createDataset(cids.toIndexedSeq.zipWithIndex.map { case (cid, i) =>
-      (cid, cvs(i).toSeq)
-    }).toDF("cid", "cv"))
+    (cids, cvs)
   }
 
   /** Nearest-centroid assignment: emb columns + `cid`, as a MAP-ONLY

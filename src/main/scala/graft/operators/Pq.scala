@@ -6,35 +6,97 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Product quantization — the memory-side scale path the reference's
   * in-RAM float index cannot take at 100 TB: vectors compress to m
-  * subspace codes (64 floats → 8 bytes here), ADC search scans codes
-  * against a per-query lookup table and only the rerank touches real
-  * vectors. Subspace codebooks come from the same deterministic
+  * subspace codes (dim floats → m codes; the data-sized m keeps about
+  * 8 floats per subspace, 200 floats → 25 codes), ADC search scans
+  * codes against a per-query lookup table and only the rerank touches
+  * real vectors. Subspace codebooks come from the same deterministic
   * quantized-exact k-means as IVF (Ivf.centroids), so build, codes,
   * and search are bit-stable under any partitioning.
   *
-  * Scale shape: train = m small k-means over N×dsub slices; encode =
-  * one scan with a broadcast 128-row codebook (min-struct argmin, no
-  * shuffle beyond the map-side combine); search = BruteForce-style
-  * per-partition kernel over the 8-byte codes with a broadcast
-  * Q×m×ksub LUT — the full-vector table is never read until rerank.
+  * Scale shape: train = ONE read of the train set per Lloyd round for
+  * all m subspaces (driver-side over one collect when it fits, else
+  * one scan + one (sub, cid) aggregation per round); encode = one scan
+  * with the broadcast m×ksub codebook (no shuffle); search =
+  * BruteForce-style per-partition kernel over the codes with a
+  * broadcast Q×m×ksub LUT — the full-vector table is never read until
+  * rerank.
   */
 object Pq {
 
-  /** Per-subspace codebooks: (sub, cid, cv array<double> of dsub).
-    * `nHint` = the train-row count when the caller knows it — lets
-    * each subspace k-means take Ivf.centroids' fused driver branch
-    * under its gates (bit-identical; IvfFusedSpec). */
-  def train(emb: DataFrame, m: Int, ksub: Int, iters: Int,
+  /** Per-subspace codebooks: (sub, cid, cv array<double> of dsub),
+    * each subspace bit-identical to Ivf.centroids over its slice
+    * `slice(embedding, sub·dsub + 1, dsub)` (PqSpec). `dim` = the
+    * embedding width (the caller's memoized Tables.embDim — no probe
+    * job). Every Lloyd round reads the train set ONCE for all m
+    * subspaces:
+    *   - driver branch (`nHint` = the train-row count, under
+    *     Ivf.fusedFits for the n × dim collect and the per-subspace
+    *     n·ksub·dsub round): collect (vec_id, embedding) once, run the
+    *     shared Ivf.lloyd loop per subspace over in-memory slices;
+    *   - DataFrame branch (gate miss or no hint): see trainScans. */
+  def train(emb: DataFrame, dim: Int, m: Int, ksub: Int, iters: Int,
       nHint: Option[Long] = None): DataFrame = {
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
     require(dim % m == 0, s"PQ subspaces must tile the dimension: dim=$dim m=$m")
     val dsub = dim / m
-    (0 until m).map { s =>
-      val sliced = emb.select(col("vec_id"),
-        slice(col("embedding"), s * dsub + 1, dsub).as("embedding"))
-      Ivf.centroids(sliced, ksub, iters, nHint.map(n => (n, dsub)))
-        .select(lit(s).as("sub"), col("cid"), col("cv"))
-    }.reduce(_.union(_))
+    val books = nHint
+      .filter(n => Ivf.fusedFits(n, dim, ksub, dsub))
+      .flatMap(_ => Ivf.collectFloatRows(emb)) match {
+      case Some(rows) => (0 until m).map { s =>
+          val off = s * dsub
+          // Array.slice truncates like SQL slice() on a short row
+          Ivf.lloyd(rows.map { case (id, v) => (id, v.slice(off, off + dsub)) }, ksub, iters)
+        }
+      case None => trainScans(emb, dsub, m, ksub, iters)
+    }
+    val spark = emb.sparkSession
+    import spark.implicits._
+    spark.createDataset(books.zipWithIndex.flatMap { case ((cids, cvs), sub) =>
+      cids.indices.map(i => (sub, cids(i), cvs(i).toSeq))
+    }).toDF("sub", "cid", "cv")
+  }
+
+  /** The distributed Lloyd loop for all m subspaces at once, with the
+    * banks held on the driver (m × ksub × dsub doubles):
+    *   - init = the ksub lowest vec_ids, read once (cid = rank), sliced
+    *     per subspace;
+    *   - each round = ONE scan + ONE aggregation: PqEncodeCodes assigns
+    *     every subspace (bit-identical to per-subspace VecNearestCid —
+    *     PqSpec), posexplode pairs each (sub, cid) with its slice, and
+    *     a (sub, cid) Moments aggregation yields the next banks; only
+    *     non-empty cells survive, as in Ivf.centroids' groupBy.
+    * pqIndex reaches it for ≥512d corpora past 262k vectors (ksub 256:
+    * the ~33–37k × dim train collect outgrows the bank cap) and for
+    * ≥1024d past 65k; up to 384d its train set always fits the driver
+    * branch. */
+  private def trainScans(emb: DataFrame, dsub: Int, m: Int, ksub: Int,
+      iters: Int): IndexedSeq[(Array[Long], Array[Array[Double]])] = {
+    val init = emb.orderBy(col("vec_id")).limit(ksub)
+      .select(col("vec_id"), Vec.asD(col("embedding")))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1).map(_._2)
+    var books = (0 until m).map { s =>
+      (Array.tabulate(init.length)(_.toLong), init.map(_.slice(s * dsub, s * dsub + dsub)))
+    }
+    val bc = org.apache.spark.sql.graftbridge.Bridge
+    for (_ <- 1 to iters) {
+      val codes = bc.column(graft.functions.PqEncodeCodes(bc.expr(col("embedding")), dsub,
+        books.map(_._1).toArray, books.map(_._2).toArray))
+      val next = emb.select(codes.as("codes"), col("embedding"))
+        .select(posexplode(col("codes")).as(Seq("sub", "cid")), col("embedding"))
+        .groupBy(col("sub"), col("cid"))
+        .agg(Moments.moments(dsub)(
+          slice(col("embedding"), col("sub") * dsub + 1, lit(dsub))).as("m"))
+        .select(col("sub"), col("cid"), transform(col("m.sums"),
+          x => x.cast("double") / col("m.n") / lit(1000000.0)).as("cv"))
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1).toLong, r.getSeq[Double](2).toArray))
+        .groupBy(_._1)
+      books = (0 until m).map { s =>
+        val cells = next(s).sortBy(_._2)
+        (cells.map(_._2), cells.map(_._3))
+      }
+    }
+    books
   }
 
   private def collectBanks(
@@ -65,8 +127,7 @@ object Pq {
     *     2M×200d encode never finished (round-10 open item 36).
     * PqSpec pins the fused kernel bit-identical to form (2) at
     * m ∈ {8, 16, 50}. */
-  def encode(emb: DataFrame, cents: DataFrame, m: Int): DataFrame = {
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+  def encode(emb: DataFrame, cents: DataFrame, dim: Int, m: Int): DataFrame = {
     require(dim % m == 0, s"PQ subspaces must tile the dimension: dim=$dim m=$m")
     val dsub = dim / m
     val bc = org.apache.spark.sql.graftbridge.Bridge
@@ -79,8 +140,8 @@ object Pq {
   /** The retired per-subspace column form (dead formulation (2) above),
     * kept ONLY as the spec oracle for PqSpec's kernel bit-equality —
     * never call it on a real corpus at large m. */
-  private[graft] def encodePerSubspace(emb: DataFrame, cents: DataFrame, m: Int): DataFrame = {
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+  private[graft] def encodePerSubspace(emb: DataFrame, cents: DataFrame, dim: Int,
+      m: Int): DataFrame = {
     require(dim % m == 0, s"PQ subspaces must tile the dimension: dim=$dim m=$m")
     val dsub = dim / m
     val bc = org.apache.spark.sql.graftbridge.Bridge

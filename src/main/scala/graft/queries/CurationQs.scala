@@ -34,9 +34,10 @@ object CurationQs {
     val emb = Tables.t(s, dir, "embeddings")
     // memoized count (round 16): a fresh count job per invocation for a
     // write-once corpus
-    val k = Ivf.cellsFor(graft.Tables.embCount(s, dir))
+    val n = graft.Tables.embCount(s, dir)
+    val k = Ivf.cellsFor(n)
     graft.operators.ProjIndex.ensureIvf(s, dir, "all", k, SampleIters) {
-      val (c, a, _) = Ivf.sizedBuild(emb, SampleIters)
+      val (c, a, _) = Ivf.sizedBuild(emb, SampleIters, n, graft.Tables.embDim(s, dir))
       (c, a)
     }
   }

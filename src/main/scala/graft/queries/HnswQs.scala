@@ -162,9 +162,10 @@ object HnswQs {
     * headline lesson). */
   def sweepIvf(s: SparkSession, dir: String) = {
     val b = Tables.t(s, dir, "embeddings").filter(col("vec_id") % 50 =!= 0)
-    val k = Ivf.cellsFor(Tables.baseCount(s, dir)) // memoized (round 16)
+    val n = Tables.baseCount(s, dir) // memoized (round 16)
+    val k = Ivf.cellsFor(n)
     graft.operators.ProjIndex.ensureIvf(s, dir, "sweep", k, 2) {
-      val (c, a, _) = Ivf.sizedBuild(b, 2)
+      val (c, a, _) = Ivf.sizedBuild(b, 2, n, Tables.embDim(s, dir))
       (c, a)
     }
   }

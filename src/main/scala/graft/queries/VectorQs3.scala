@@ -22,7 +22,8 @@ object VectorQs3 {
     "ivf_build",
     (s, dir) => {
       val emb = Tables.t(s, dir, "embeddings")
-      val (cents, assigned, _) = Ivf.sizedBuild(emb, Iters)
+      val (cents, assigned, _) = Ivf.sizedBuild(emb, Iters,
+        Tables.embCount(s, dir), Tables.embDim(s, dir)) // memoized
       assigned.groupBy(col("cid")).agg(count(lit(1)).as("n_vecs"))
         .join(cents, Seq("cid"))
         .select(col("cid"), col("n_vecs"),
@@ -45,9 +46,10 @@ object VectorQs3 {
     * proved scans 25% of the base per probe set. */
   def baseIvf(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val b = Tables.t(s, dir, "embeddings").filter(col("vec_id") % 50 =!= 0)
-    val k = Ivf.cellsFor(Tables.baseCount(s, dir)) // memoized (round 16)
+    val n = Tables.baseCount(s, dir) // memoized (round 16)
+    val k = Ivf.cellsFor(n)
     graft.operators.ProjIndex.ensureIvf(s, dir, "base", k, Iters) {
-      val (c, a, _) = Ivf.sizedBuild(b, Iters)
+      val (c, a, _) = Ivf.sizedBuild(b, Iters, n, Tables.embDim(s, dir))
       (c, a)
     }
   }
@@ -197,22 +199,24 @@ object VectorQs3 {
   def pqRerankFor(n: Long): Int =
     math.min(2000L, math.max(50L, n / 500L)).toInt
 
-  /** Persisted PQ index over the base side: 8 subspace codebooks of
-    * ksub(N) centroids each (64 floats → 8 codes/vector). Codebooks
-    * train on the strided sample (Ivf.trainStrideFor — stride 1 at
-    * test SF), every vector pays only the encode pass. */
+  /** Persisted PQ index over the base side: pqMFor(N, dim) subspace
+    * codebooks of ksub(N) centroids each (64 floats → 8 codes/vector,
+    * 200 floats → 25). Codebooks train on the strided sample
+    * (Ivf.trainStrideFor — stride 1 at test SF), every vector pays only
+    * the encode pass. */
   def pqIndex(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val b = Tables.t(s, dir, "embeddings").filter(col("vec_id") % 50 =!= 0)
       .select(col("vec_id"), col("embedding"))
     val n = Tables.baseCount(s, dir) // memoized (round 16)
+    val dim = Tables.embDim(s, dir) // memoized
     val ksub = pqKsubFor(n)
-    val m = pqMFor(n, Tables.embDim(s, dir))
+    val m = pqMFor(n, dim)
     val stride = Ivf.trainStrideFor(n, ksub)
     graft.operators.ProjIndex.ensurePq(s, dir, m, ksub, PqIters) {
       val train = if (stride <= 1L) b else b.filter(col("vec_id") % stride === 0)
-      val cents = graft.operators.Pq.train(train, m, ksub, PqIters,
+      val cents = graft.operators.Pq.train(train, dim, m, ksub, PqIters,
         nHint = Some(n / stride + 1L))
-      val codes = graft.operators.Pq.encode(b, cents, m)
+      val codes = graft.operators.Pq.encode(b, cents, dim, m)
       (cents, codes)
     }
   }

@@ -35,20 +35,9 @@ class IvfFusedSpec extends AnyFunSuite {
   }
 
   test("fused == DataFrame Lloyd under ties, duplicates and cell extinction") {
-    import spark.implicits._
-    // duplicate vectors (ties in the argmin must break to the lower
-    // cid in both branches) and a far outlier cluster whose single
-    // init centroid captures everything around it — small k over
-    // clustered data makes some cells go empty across iterations
-    val rows = (0 until 40).map { i =>
-      val c = i % 3
-      val v = Array.tabulate(4)(d =>
-        if (c == 2) 1000f + d else (c * 10 + (i % 5)).toFloat + d * 0.5f)
-      (i.toLong * 7 + 3, v)
-    } ++ Seq((500L, Array.fill(4)(0.25f)), (501L, Array.fill(4)(0.25f)))
-    val emb = rows.toDF("vec_id", "embedding")
+    val emb = IvfFusedSpec.tieCorpus(spark)
     for (k <- Seq(2, 4, 8); iters <- 1 to 3)
-      compare(emb, k, iters, rows.length.toLong, 4)
+      compare(emb, k, iters, IvfFusedSpec.TieRows, 4)
   }
 
   test("non-float element type falls back to the DataFrame branch") {
@@ -59,5 +48,24 @@ class IvfFusedSpec extends AnyFunSuite {
     val a = canon(Ivf.centroids(emb, 4, 2))
     val b = canon(Ivf.centroids(emb, 4, 2, Some((20L, 4))))
     assert(a == b)
+  }
+}
+
+object IvfFusedSpec {
+  val TieRows = 42L
+
+  /** 42 rows × 4d: duplicate vectors (ties in the argmin must break to
+    * the lower cid in every branch) and a far outlier cluster whose
+    * single init centroid captures everything around it — small k over
+    * clustered data makes some cells go empty across iterations. */
+  def tieCorpus(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val rows = (0 until 40).map { i =>
+      val c = i % 3
+      val v = Array.tabulate(4)(d =>
+        if (c == 2) 1000f + d else (c * 10 + (i % 5)).toFloat + d * 0.5f)
+      (i.toLong * 7 + 3, v)
+    } ++ Seq((500L, Array.fill(4)(0.25f)), (501L, Array.fill(4)(0.25f)))
+    rows.toDF("vec_id", "embedding")
   }
 }
