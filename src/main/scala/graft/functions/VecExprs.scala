@@ -258,6 +258,21 @@ case class VecNearestCid(child: Expression, cids: Array[Long], bank: Array[Array
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+object VecNearestCid {
+
+  /** The kernel's per-centroid fold over driver-side arrays: float
+    * widened per element, left fold over the shared prefix — the d2
+    * that nullSafeEval/doGenCode compute for one bank row. Shared by
+    * the driver-side Lloyd loop (Ivf.lloyd) and IVF probe ranking
+    * (Ivf.probeCells), so every branch scores cells with ONE fold. */
+  def d2(v: Array[Float], cv: Array[Double]): Double = {
+    val m = math.min(v.length, cv.length)
+    var s = 0.0; var i = 0
+    while (i < m) { val d = v(i).toDouble - cv(i); s += d * d; i += 1 }
+    s
+  }
+}
+
 /** Fused cosine: dot, |a|², |b|² in one pass (three independent left
   * folds), result dot/sqrt(n2a*n2b) — associating exactly like
   * Vec.sqlCosine. */

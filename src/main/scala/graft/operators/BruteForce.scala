@@ -34,10 +34,7 @@ object BruteForce {
       k: Int,
       excludeSelf: Boolean = false): DataFrame = {
     val spark = base.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.VectorTopKJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.VectorTopKJoinStrategy
-    }
+    graft.plans.VectorTopKJoin.ensureStrategy(spark)
     val bc = org.apache.spark.sql.graftbridge.Bridge
     val node = graft.plans.VectorTopKJoin(
       bc.planOf(queries.select(col("qid"), col("qv"))),

@@ -37,8 +37,12 @@ object IndexStore {
     (spark.read.parquet(s"$path/centroids"),
       spark.read.parquet(s"$path/cells"))
 
-  /** Probe a PERSISTED IVF index: nearest-nprobe cells per query, read
-    * only those cells (partition pruning on cid), exact rerank. */
+  /** Probe a PERSISTED IVF index with Ivf.search: each query's
+    * nearest-nprobe cells are ranked on the driver against the loaded
+    * centroids, the scan lists and reads only the probed cells'
+    * partitions (partition filter on cid), and one VectorTopKJoin pass
+    * scores each row against the queries probing its cell → exact
+    * top-k (qid, rnk, bid, dist). */
   def searchPersisted(
       spark: SparkSession,
       path: String,

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.functions.Vec
+import graft.functions.{Vec, VecNearestCid}
+import graft.plans.{CellProbes, VectorTopKJoin}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -11,7 +12,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Scale shape (SURVEY §5): only the k centroid vectors ever reach the
   * driver (k ≪ N by construction); assignment is a broadcast map over
   * the base; each Lloyd iteration is one scan + one groupBy(cid, dim)
-  * partial aggregation. Search shuffles only the probed cells.
+  * partial aggregation. Search ranks each query's probe cells on the
+  * driver against the collected bank, prunes the cid-partitioned cells
+  * table to the probed cells, and scores them in ONE scan
+  * (plans.VectorTopKJoin in probe mode): only per-partition top-k
+  * pools are shuffled, never a candidate row.
   */
 object Ivf {
 
@@ -187,17 +192,13 @@ object Ivf {
       // centroid update reads only m.sums and m.n)
       val sums = new java.util.HashMap[Long, Array[Long]]()
       rows.foreach { case (_, v) =>
-        // VecNearestCid's fold verbatim: float widened per element,
-        // strict Double.compare, ascending-cid scan keeps the lowest
-        // cid on ties
+        // VecNearestCid's fold (shared), strict Double.compare,
+        // ascending-cid scan keeps the lowest cid on ties
         var best = Double.PositiveInfinity
         var bestCid = cids(0)
         var c = 0
         while (c < cvs.length) {
-          val cv = cvs(c)
-          val m = math.min(v.length, cv.length)
-          var acc = 0.0; var i = 0
-          while (i < m) { val d = v(i).toDouble - cv(i); acc += d * d; i += 1 }
+          val acc = VecNearestCid.d2(v, cvs(c))
           if (java.lang.Double.compare(acc, best) < 0) { best = acc; bestCid = cids(c) }
           c += 1
         }
@@ -234,13 +235,18 @@ object Ivf {
     * smallest cid), so every oracle hash is unchanged — and the
     * vec_id↔best self-join this shape needed is gone too. */
   def assign(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val rows = cents.select(col("cid").cast("long"), col("cv").cast("array<double>"))
-      .collect().sortBy(_.getLong(0))
-    val cids = rows.map(_.getLong(0))
-    val bank = rows.map(_.getSeq[Double](1).toArray)
+    val (cids, bank) = collectBank(cents)
     val bc = org.apache.spark.sql.graftbridge.Bridge
     emb.withColumn("cid",
-      bc.column(graft.functions.VecNearestCid(bc.expr(col("embedding")), cids, bank)))
+      bc.column(VecNearestCid(bc.expr(col("embedding")), cids, bank)))
+  }
+
+  /** The centroid bank on the driver, cid-ascending: (cids, cv widened
+    * to double). */
+  private def collectBank(cents: DataFrame): (Array[Long], Array[Array[Double]]) = {
+    val rows = cents.select(col("cid").cast("long"), col("cv").cast("array<double>"))
+      .collect().sortBy(_.getLong(0))
+    (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
   }
 
   /** Entry-quantizer resolution rule (round 11, lesson 42 / m7).
@@ -385,23 +391,75 @@ object Ivf {
     structural.lastOption.map(_._2._1).getOrElse(ladder.head._1)
   }
 
-  /** nprobe nearest centroids per query → candidates from those cells
-    * → exact rerank top-k. */
+  /** nprobe nearest centroids per query → score only those cells' rows
+    * → exact top-k (qid, rnk, bid, dist), rnk 1-based by (dist, bid).
+    *
+    * Shape: the query side (bounded by contract) and the centroid bank
+    * are collected; each query's probes are ranked on the driver
+    * (probeCells); the cells table is pruned to the probed cells
+    * (partition pruning on a persisted cid-partitioned index) and
+    * streamed once through plans.VectorTopKJoin, which scores each row
+    * against only the queries probing its cell. No candidate row
+    * carrying two vectors is ever built (lesson 67); only per-partition
+    * pools are shuffled. Row-identical to the candidate-join form
+    * IvfProbeSpec keeps as its reference: probe d2 is VecNearestCid's
+    * fold, probe order TopKAgg's (d2, cid) rule, dist Rescore.l2Of,
+    * pools TopKAgg's (dist, bid) rule merged through TopK.perGroup. */
   def search(
       base: DataFrame, // vec_id, embedding, cid
-      cents: DataFrame,
-      queries: DataFrame, // qid, qv
+      cents: DataFrame, // cid, cv
+      queries: DataFrame, // qid, qv: array<float>
       nprobe: Int,
       k: Int): DataFrame = {
-    val probed = TopK.perGroup(
-      queries.crossJoin(broadcast(cents))
-        .select(col("qid").as("g"), col("cid"),
-          Vec.l2sqFast(col("qv"), col("cv")).as("d2")),
-      "g", "cid", "d2", nprobe, asc = true)
-      .select(col("g").as("qid"), col("cid"))
-    val cand = base.join(probed.join(queries, Seq("qid")), Seq("cid"))
-      .select(col("qid"), col("vec_id").as("bid"),
-        Vec.l2Fast(col("qv"), col("embedding")).as("dist"))
-    TopK.perGroup(cand, "qid", "bid", "dist", k, asc = true)
+    val qs = collectQueries(queries)
+    val (cids, bank) = collectBank(cents)
+    val probes = qs.toSeq.flatMap { case (qid, qv) =>
+      probeCells(qv, cids, bank, nprobe).map(cid => (qid, cid))
+    }
+    scoreProbed(base, qs, probes, k)
+  }
+
+  /** Exact top-k over caller-chosen probes: each query of `queries`
+    * (qid, qv) is scored against the rows of the cells that `probes`
+    * (qid, cid) names for it. Same operator and output as `search`. */
+  def searchProbed(base: DataFrame, queries: DataFrame,
+      probes: Seq[(Long, Long)], k: Int): DataFrame =
+    scoreProbed(base, collectQueries(queries), probes, k)
+
+  /** A query's `nprobe` nearest cells: d2 is VecNearestCid's fold,
+    * ranked in TopKAgg's strict (d2, cid) order (NaN worst, ties to
+    * the lower cid) — the cells TopK.perGroup keeps over the query ×
+    * centroid d2 table. */
+  private[graft] def probeCells(qv: Array[Float], cids: Array[Long],
+      bank: Array[Array[Double]], nprobe: Int): Array[Long] = {
+    val d2 = bank.map(VecNearestCid.d2(qv, _))
+    cids.indices
+      .sortWith((a, b) => Rescore.poolBeats(d2(a), cids(a), d2(b), cids(b)))
+      .take(nprobe).map(cids).toArray
+  }
+
+  private def collectQueries(queries: DataFrame): Array[(Long, Array[Float])] = {
+    val s = queries.sparkSession
+    import s.implicits._
+    queries.select(col("qid").cast("long"), col("qv")).as[(Long, Array[Float])]
+      .collect().sortBy(_._1)
+  }
+
+  private def scoreProbed(base: DataFrame, qs: Array[(Long, Array[Float])],
+      probes: Seq[(Long, Long)], k: Int): DataFrame = {
+    val spark = base.sparkSession
+    import spark.implicits._
+    VectorTopKJoin.ensureStrategy(spark)
+    val cp = CellProbes(probes)
+    // on a cid-partitioned parquet index this is a partition filter:
+    // only the probed cells' files are listed and read
+    val cells = base.filter(col("cid").isin(cp.cells.toSeq: _*))
+      .select(col("vec_id").as("bid"), col("embedding").as("bv"), col("cid").cast("long"))
+    val bc = org.apache.spark.sql.graftbridge.Bridge
+    val node = VectorTopKJoin(
+      bc.planOf(spark.createDataset(qs.toSeq).toDF("qid", "qv")),
+      bc.planOf(cells), "l2", k, excludeSelf = false, probes = Some(cp))
+    TopK.perGroup(bc.ofRows(spark, node), "qid", "bid", "score", k, asc = true)
+      .withColumnRenamed("score", "dist")
   }
 }

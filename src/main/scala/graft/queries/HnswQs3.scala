@@ -700,11 +700,6 @@ object HnswQs3 {
     rich.union(ck).union(ck.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  /** Probe accessor for RoutedSweep — the sweep must run the EXACT
-    * catalog edge set, not a re-derivation. */
-  private[graft] def routedEdgesProbe(s: SparkSession, dir: String,
-      metric: String): DataFrame = routedEdges(s, dir, metric)
-
   /** The routed search, metric-general (r7 item 3): edges, seed
     * ranking and the beam all score with `metric` (dist =
     * Vec.metricDist — negated similarity for cosine/ip). Counted

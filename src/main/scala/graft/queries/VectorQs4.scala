@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.Vec
-import graft.operators.{Lsh, TopK}
+import graft.operators.{Ivf, Lsh, TopK}
 import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -276,12 +276,14 @@ object VectorQs4 {
     * because the k-means centroids are iterative. AdaptiveNprobeSpec
     * pins recall ≥ fixed nprobe=1 at average probes < 4.
     *
-    * Scale shape: identical to ivf_search (candidates only from probed
-    * cells) — the adaptive rule is a per-query filter on the tiny
-    * (|Q|·k_cells) probe-ranking table. */
+    * Scale shape: the adaptive rule is a per-query filter on the tiny
+    * (|Q|·k_cells) probe-ranking table; its (qid, cid) probe list is
+    * collected and fed to ivf_search's operator (Ivf.searchProbed), so
+    * only the probed cells are read and no candidate row is built. */
   val ivfSearchAdaptive = Q(
     "ivf_search_adaptive",
     (s, dir) => {
+      import s.implicits._
       val emb = Tables.t(s, dir, "embeddings")
       val (cents, base) = HnswQs.sweepIvf(s, dir)
       val q = emb.filter(col("vec_id") % 50 === 0)
@@ -297,12 +299,11 @@ object VectorQs4 {
         .select(col("qid"), col("d2").as("d2min"))
       val probed = ranked.join(d2min, Seq("qid"))
         .filter(col("rnk") === 1 || col("d2") <= lit(AdaptAlpha) * col("d2min"))
-        .select(col("qid"), col("cid"))
-      val nProbed = probed.groupBy(col("qid")).agg(count(lit(1)).as("n_probed"))
-      val cand = base.join(probed.join(q, Seq("qid")), Seq("cid"))
-        .select(col("qid"), col("vec_id").as("bid"),
-          Vec.l2Fast(col("qv"), col("embedding")).as("dist"))
-      TopK.perGroup(cand, "qid", "bid", "dist", AdaptTopK, asc = true)
+        .select(col("qid"), col("cid").cast("long"))
+        .as[(Long, Long)].collect().toSeq
+      val nProbed = probed.groupBy(_._1).toSeq.map { case (qid, ps) => (qid, ps.size.toLong) }
+        .toDF("qid", "n_probed")
+      Ivf.searchProbed(base, q, probed, AdaptTopK)
         .join(nProbed, Seq("qid"))
         .select(col("qid"), col("n_probed"), col("rnk"), col("bid"), col("dist"))
         .orderBy(col("qid"), col("rnk"))
